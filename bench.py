@@ -457,8 +457,9 @@ def main() -> None:
                 t0 = time.perf_counter()
                 df = fn(spark, sf_dir)
                 n = df.count()
-                this_runs.append(round(time.perf_counter() - t0, 3))
-                best = min(best, this_runs[-1])
+                raw_elapsed = time.perf_counter() - t0
+                best = min(best, raw_elapsed)
+                this_runs.append(round(raw_elapsed, 3))
                 completed += 1
                 assert n >= 0
         except Exception as exc:  # noqa: BLE001

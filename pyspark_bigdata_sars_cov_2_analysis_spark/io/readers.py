@@ -137,21 +137,6 @@ def read_json(
     return df
 
 
-def read_binary_files(
-    spark: SparkSession, path: str, glob: str | None = None
-) -> DataFrame:
-    """Binary/image directory scan (S3) → columns
-    (path, modificationTime, length, content) with a ``label`` column
-    extracted from the parent directory name."""
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    df = reader.load(path)
-    return df.withColumn(
-        "label", F.regexp_extract(F.col("path"), r"([^/]+)/[^/]+$", 1)
-    )
-
-
 def read_images(
     spark: SparkSession, path: str, drop_invalid: bool = True
 ) -> DataFrame:

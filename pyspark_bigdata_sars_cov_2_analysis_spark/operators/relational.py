@@ -20,26 +20,10 @@ def select_columns(df: DataFrame, *cols: str | Column) -> DataFrame:
     return df.select(*cols)
 
 
-def drop_columns(df: DataFrame, *cols: str) -> DataFrame:
-    """P2/P3 — the reference's list-comprehension exclusion
-    (`spark/jobs/cases_time_analysis.py:157`) is just ``drop``."""
-    return df.drop(*cols)
-
-
-def rename_columns(df: DataFrame, mapping: Mapping[str, str]) -> DataFrame:
-    """P4 — bulk rename (`spark/jobs/cases_time_analysis.py:95-102`)."""
-    return df.withColumnsRenamed(dict(mapping))
-
-
 def with_derived(df: DataFrame, **exprs: Column) -> DataFrame:
     """P5 — derived columns, e.g. active = confirmed - deaths - recovered
     (`spark/jobs/cases_time_analysis.py:107-111`)."""
     return df.withColumns(dict(exprs))
-
-
-def cast_columns(df: DataFrame, mapping: Mapping[str, str]) -> DataFrame:
-    """P6 — imperative casts (`spark/jobs/cases_time_analysis.py:114-117`)."""
-    return df.withColumns({c: F.col(c).cast(t) for c, t in mapping.items()})
 
 
 def fill_nulls(df: DataFrame, value, subset: list[str] | None = None) -> DataFrame:

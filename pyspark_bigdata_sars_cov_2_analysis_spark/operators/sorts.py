@@ -12,11 +12,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def sort_rows(df: DataFrame, *order_by: Column | str) -> DataFrame:
-    """O1/O2 — global sort; use only on already-aggregated small frames."""
-    return df.orderBy(*order_by)
-
-
 def top_k(df: DataFrame, k: int, *order_by: Column | str) -> DataFrame:
     """O3 — top-k (TakeOrderedAndProject). Callers must include a unique
     tiebreaker for determinism (the reference's bare ``limit`` O4 is

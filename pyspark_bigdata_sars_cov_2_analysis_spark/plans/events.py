@@ -834,7 +834,8 @@ def e16_scd2_stream_enrichment(spark, sf_dir):
         .trigger(availableNow=True)
         .start()
     )
-    assert q.awaitTermination(300), "availableNow drain timed out"
+    if not q.awaitTermination(300):
+        raise TimeoutError("availableNow drain timed out")
     # the batch read of `out` honors _spark_metadata: only files the
     # sink's commit log published are listed
     return (
@@ -891,7 +892,8 @@ def e17_statestore_keys(spark, sf_dir):
         .trigger(availableNow=True)
         .start()
     )
-    assert q.awaitTermination(300), "availableNow drain timed out"
+    if not q.awaitTermination(300):
+        raise TimeoutError("availableNow drain timed out")
     keys = (
         spark.read.format("statestore")
         .load(ckpt)

@@ -1930,7 +1930,8 @@ def e18_snapshot_stream_source(spark, sf_dir):
             .trigger(availableNow=True)
             .start()
         )
-        assert q.awaitTermination(300), "snapshot_stream drain timed out"
+        if not q.awaitTermination(300):
+            raise TimeoutError("snapshot_stream drain timed out")
         # the cumulative count feeds the after_drain metrics; the LAST
         # drain's count fed nothing and was a full re-scan of the sink
         # for nothing (optimization r16, guide §1.2 "don't compute
@@ -2039,7 +2040,8 @@ def e15_snapshot_sink_stream(spark, sf_dir):
         tbl,
         ckpt,
     ).start()
-    assert q.awaitTermination(300), "availableNow drain timed out"
+    if not q.awaitTermination(300):
+        raise TimeoutError("availableNow drain timed out")
     snaps = {s["version"]: s for s in list_parquet_snapshots(tbl)}
     outs = []
     for v in (1, 2):

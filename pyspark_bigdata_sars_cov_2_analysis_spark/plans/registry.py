@@ -36,7 +36,8 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     (reserved for genuinely non-SQL-expressible ops)."""
 
     def deco(fn: QueryFn) -> QueryFn:
-        assert name not in QUERIES, f"duplicate query name {name}"
+        if name in QUERIES:
+            raise ValueError(f"duplicate query name {name}")
         QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle

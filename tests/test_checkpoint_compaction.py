@@ -317,6 +317,61 @@ def test_streaming_ingest_with_compact_every_matches_plain(
     assert admitted["compacted"] == admitted["plain"] == [102, 103, 203]
 
 
+def test_streaming_chunk_ingest_with_compact_every_matches_plain(
+    spark, tmp_path
+):
+    """Chunk-state form of the ``compact_every`` check: a
+    ``streaming_chunk_dedup_ingest`` drain with compact_every=1 publishes
+    exactly what the uncompacted drain publishes, and leaves every
+    touched ``lhb`` bucket at one file."""
+    import time as _time
+
+    def block(tag: str) -> str:
+        return " ".join(f"{tag}w{i}" for i in range(10))
+
+    B = block("boiler")
+    corpus = spark.createDataFrame(
+        [(1, f"{B} {block('seed')}")], "doc_id long, text string"
+    )
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    spark.createDataFrame(
+        [(101, f"{B} {block('a')}"), (102, block("b"))],
+        "doc_id long, text string",
+    ).coalesce(1).write.mode("append").parquet(src)
+    _time.sleep(0.2)
+    spark.createDataFrame(
+        [(201, f"{block('a')} {block('c')}"), (202, B)],
+        "doc_id long, text string",
+    ).coalesce(1).write.mode("append").parquet(src)
+
+    published = {}
+    for variant, every in (("plain", 0), ("compacted", 1)):
+        base = tmp_path / variant
+        chunk_path, out = str(base / "chunks"), str(base / "out")
+        dedup.write_chunk_checkpoint(corpus, chunk_path, "doc_id", "text",
+                                     n_buckets=8)
+        q = dedup.streaming_chunk_dedup_ingest(
+            spark, src, "doc_id long, text string",
+            chunk_path, out, str(base / "ckpt"), compact_every=every,
+        ).start()
+        assert q.awaitTermination(120), "stream drain timed out"
+        published[variant] = {
+            r.doc_id: (r.clean_text, r.n_chunks, r.n_dropped)
+            for r in spark.read.parquet(out).collect()
+        }
+        if every:
+            per_dir = _bucket_files(chunk_path, "lhb=*")
+            assert per_dir and all(n == 1 for n in per_dir.values()), per_dir
+            assert dedup.ingest_high_water_mark(chunk_path) == 1
+    assert published["compacted"] == published["plain"] == {
+        101: (block("a"), 2, 1),
+        102: (block("b"), 1, 0),
+        201: (block("c"), 2, 1),
+        202: ("", 1, 1),
+    }
+
+
 def test_marker_race_first_publisher_wins_whole(tmp_path, monkeypatch):
     """VERDICT r10 advisory (closed r11): two PROCESSES racing the same
     uncommitted batch id can never interleave marker content — each

@@ -227,6 +227,47 @@ def test_ingest_markers_end_to_end_with_file_uri(tmp_path):
     ]
 
 
+def test_checkpoint_rewrites_with_file_uri(spark, tmp_path):
+    """Compaction and stamp migration accept the same ``file:`` URI
+    spelling as the checkpoint writers, the ingest and the hwm reader:
+    the staged swap runs on the resolved local path, keeps rows, stamps
+    and markers, and leaves no staging or backup directory behind."""
+    from pyspark.sql import functions as F
+
+    from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import dedup as D
+
+    corpus = spark.createDataFrame(
+        [(d, f"some shingled text body number {d} for banding")
+         for d in range(6)],
+        "doc_id long, text string",
+    )
+    more = corpus.withColumn("doc_id", F.col("doc_id") + 100)
+    families = (
+        ("bands", D.write_band_checkpoint, D.read_band_checkpoint,
+         D.compact_band_checkpoint, D.migrate_band_checkpoint_stamps),
+        ("chunks", D.write_chunk_checkpoint, D.read_chunk_checkpoint,
+         D.compact_chunk_checkpoint, D.migrate_chunk_checkpoint_stamps),
+    )
+    for name, write, read, compact, migrate in families:
+        uri = f"file://{tmp_path}/{name}"
+        local = str(tmp_path / name)
+        write(corpus, uri, "doc_id", "text")
+        write(more, uri, "doc_id", "text", mode="append", batch_id=0)
+        want = sorted(map(tuple, read(spark, uri, "doc_id").collect()))
+
+        stats = compact(spark, uri)
+        assert stats["rows"] == len(want) and stats["hwm"] == 0
+        res = migrate(spark, uri)
+        assert res["rows"] == len(want) and res["had_stamp_col"] is True
+
+        # URI and plain spellings address ONE checkpoint
+        assert sorted(map(tuple, read(spark, local, "doc_id").collect())) \
+            == want
+        assert D.ingest_high_water_mark(uri) == 0
+        assert [p for p in os.listdir(tmp_path)
+                if p.startswith(f"{name}.")] == []
+
+
 def test_manifest_is_json_complete_after_claim(spark, tmp_path):
     """put_if_absent publishes complete content: every listed manifest
     parses as JSON with the protocol's required keys (the no-torn-read

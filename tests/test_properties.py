@@ -220,6 +220,35 @@ def test_simhash_band_layout_covers_every_bit():
             assert covered == list(range(bits)), (bits, band_bits, layout)
 
 
+def test_simhash_band_layout_rejects_out_of_range_band_bits():
+    """The band_bits bound is a runtime check, not an ``assert`` that
+    ``python -O`` strips."""
+    import pytest
+
+    from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata.dedup import (
+        simhash_band_layout,
+    )
+
+    for band_bits in (0, -1, 65):
+        with pytest.raises(ValueError, match="band_bits"):
+            simhash_band_layout(64, band_bits)
+
+
+def test_query_registry_refuses_duplicate_name():
+    """Registering a second query under a taken name raises ValueError
+    (a runtime check that survives ``python -O``) and leaves the first
+    registration in place."""
+    import pytest
+
+    from pyspark_bigdata_sars_cov_2_analysis_spark.plans import registry
+
+    name = next(iter(registry.QUERIES))
+    first = registry.QUERIES[name]
+    with pytest.raises(ValueError, match="duplicate query name"):
+        registry.query(name)(lambda spark, sf_dir: None)
+    assert registry.QUERIES[name] is first
+
+
 def test_simhash_neardup_warns_when_bands_below_hamming(spark):
     """n_bands <= max_hamming voids the pigeonhole detection guarantee —
     the operator must say so instead of silently losing recall."""
@@ -2417,6 +2446,30 @@ def test_lsh_bands_remainder_band_covers_trailing_hashes(spark):
         f"remainder band must hold the 2 trailing hashes, got "
         f"{len(bytes(rem))}B"
     )
+
+
+def test_lsh_bands_refuses_out_of_range_minhash(spark):
+    """band_sig packs each min-hash into 4 bytes, so a value outside
+    [0, 2^32) would be truncated into a signature that collides with an
+    in-range one (-1 -> ffffffff, 2^32 -> 10000000). lsh_bands raises
+    instead; the in-range extremes still encode."""
+    import pytest
+    from pyspark.errors import SparkRuntimeException
+
+    from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import dedup
+
+    schema = "doc_id long, " + ", ".join(f"mh_{j} long" for j in range(12))
+    for bad in (-1, 2**32):
+        sigs = spark.createDataFrame(
+            [(1, bad, *range(1, 12))], schema
+        )
+        with pytest.raises(SparkRuntimeException, match="mh_0 outside"):
+            dedup.lsh_bands(sigs, "doc_id").collect()
+    ok = spark.createDataFrame([(1, 0, *range(1, 10), 2**32 - 1, 7)], schema)
+    band0 = dedup.lsh_bands(ok, "doc_id").where("band = 0").first()
+    assert bytes(band0.band_sig) == bytes.fromhex("000000000000000100000002")
+    band3 = dedup.lsh_bands(ok, "doc_id").where("band = 3").first()
+    assert bytes(band3.band_sig) == bytes.fromhex("00000009ffffffff00000007")
 
 
 def test_band_checkpoint_sig_encoding_migration(spark, tmp_path):

@@ -947,6 +947,52 @@ def test_hwm_zero_incarnation_collision_refused(spark, tmp_path):
     ) == [10]
 
 
+def test_chunk_hwm_zero_incarnation_collision_refused(spark, tmp_path):
+    """Chunk-state form of the hwm==0 blind-spot check: after exactly
+    one committed batch a restarted incarnation's first epoch (0 == hwm)
+    carrying different docs is refused before any state or output is
+    touched, while the true same-content replay stays allowed and
+    idempotent."""
+    import pytest as _pytest
+
+    from pyspark_bigdata_sars_cov_2_analysis_spark.llmdata import dedup
+
+    seed = spark.createDataFrame(
+        [(1, "seed text about executor memory overhead accounting and "
+             "off heap allocation limits")],
+        "doc_id long, text string",
+    )
+    x_text = ("incarnation A batch about dynamic allocation upscaling "
+              "policies and idle executor reaping")
+    x = spark.createDataFrame([(10, x_text)], "doc_id long, text string")
+    y = spark.createDataFrame(
+        [(10, "incarnation B batch about speculative task launch "
+              "quantiles and straggler mitigation")],
+        "doc_id long, text string",
+    )
+    path, out = str(tmp_path / "chunks"), str(tmp_path / "out")
+    dedup.write_chunk_checkpoint(seed, path, "doc_id", "text")
+    dedup.chunk_ingest_batch_idempotent(x, 0, path, out)
+    assert dedup.ingest_high_water_mark(path) == 0
+
+    def published():
+        return sorted(
+            (r.doc_id, r.ingest_batch, r.clean_text, r.n_dropped)
+            for r in spark.read.parquet(out).collect()
+        )
+
+    want = [(10, 0, x_text, 0)]
+    assert published() == want
+    # true replay of the same batch: allowed, output unchanged
+    dedup.chunk_ingest_batch_idempotent(x, 0, path, out)
+    assert published() == want
+    # restarted incarnation reusing id 0 with different docs: refused
+    with _pytest.raises(ValueError, match="DIFFERENT content"):
+        dedup.chunk_ingest_batch_idempotent(y, 0, path, out)
+    assert published() == want
+    assert dedup.ingest_high_water_mark(path) == 0
+
+
 def test_checkpoint_append_requires_explicit_batch_id(spark, tmp_path):
     """ADVICE r9: a default-stamped append would mark the rows as seed
     (-1), placing them OUTSIDE the replay exclusion — a torn manual
