@@ -245,6 +245,7 @@ def audit_parquet_layout(path: str, small_file_mb: int = 16) -> dict:
     import glob as _glob
     import os as _os
 
+    path = _local_path(path)
     sizes = sorted(
         _os.path.getsize(f)
         for f in _glob.glob(_os.path.join(path, "**", "*.parquet"), recursive=True)
@@ -301,6 +302,7 @@ def recover_staged_swap(path: str) -> dict:
     import os as _os
     import shutil
 
+    path = _local_path(path)
     marker = path.rstrip("/") + ".swap-in-progress"
     if not _os.path.exists(marker):
         return {"action": "none", "reason": "no marker"}
@@ -407,6 +409,7 @@ def merge_upsert_parquet(
     import shutil
 
     _refuse_snapshot_table(path, "merge_upsert_parquet")
+    path = _local_path(path)
     # self-heal a previous crashed swap before reading the target: the
     # marker protocol makes roll-forward/back safe and idempotent, so a
     # maintenance job restarted after a mid-swap crash just works
@@ -500,6 +503,7 @@ def write_parquet_sized(
     import shutil
     from itertools import islice
 
+    path = _local_path(path)
     probe = path.rstrip("/") + "_sizing"
     n_parts = max(1, df.rdd.getNumPartitions())
     per_part = max(1, sample_rows // n_parts)
@@ -546,6 +550,7 @@ def compact_parquet(
     import shutil
 
     _refuse_snapshot_table(path, "compact_parquet")
+    path = _local_path(path)
     # self-heal a previous crashed swap (see merge_upsert_parquet)
     recover_staged_swap(path)
     df = spark.read.parquet(path)
@@ -606,6 +611,14 @@ def write_orc(
 # create — readers resolve a manifest FIRST and then read only the files it
 # names, so they can never observe a half-published version, and old
 # versions stay readable (time travel) until vacuumed.
+#
+# Publish paths: new bytes are staged by _stage_files and count-verified by
+# _footer_row_count. write_parquet_snapshot runs its own unbounded loop (an
+# append re-bases on the new latest); compaction, merge/delete/update and
+# restore run _publish_loop (build the next payload from the latest, stamp
+# the stream high-water, link, bounded retry), compaction and DML building
+# theirs with _rewrite_payload; clone links its v1 once. Read, restore and
+# clone resolve version/as-of pins through _resolve_manifest.
 # ---------------------------------------------------------------------------
 
 _SNAP_DIR = "_snapshots"
@@ -973,6 +986,25 @@ def _validate_cluster_args(
         )
 
 
+def _stage_files(spark, path: str, version: int, df: DataFrame):
+    """Step one of every publish that brings new bytes: write ``df`` to a
+    fresh immutable ``data/v<N>-<uuid>/`` dir of the table (the uuid
+    keeps a lost race's files distinct from the winner's). Returns
+    ``(data_dir, files, schema)`` — the sorted file list and the schema
+    the files actually carry, from ONE schema-inferring read; row counts
+    come from the footers (:func:`_footer_row_count`), never a re-scan."""
+    import uuid as _uuid
+
+    data_dir = _fs.for_path(path).join(
+        _local_path(path), "data", f"v{version:08d}-{_uuid.uuid4().hex[:8]}"
+    )
+    df.write.mode("error").parquet(data_dir)
+    written = spark.read.parquet(data_dir)
+    return data_dir, sorted(written.inputFiles()), [
+        list(p) for p in written.dtypes
+    ]
+
+
 def write_parquet_snapshot(
     df: DataFrame, path: str, mode: str = "overwrite",
     src_batch: int | None = None, allow_schema_evolution: bool = False,
@@ -1034,7 +1066,6 @@ def write_parquet_snapshot(
     their dtype; a type conflict always refuses. Drift-refusal stays the
     default so accidental producer drift cannot silently widen a table."""
     import time as _time
-    import uuid as _uuid
 
     if mode not in ("overwrite", "append"):
         raise ValueError(f"mode must be overwrite|append, got {mode!r}")
@@ -1048,23 +1079,12 @@ def write_parquet_snapshot(
                 f"schema {df.columns}"
             )
     spark = df.sparkSession
-    fs = _fs.for_path(path)
-    base = _local_path(path)
-    fs.make_dirs(_snap_path(path))
+    _fs.for_path(path).make_dirs(_snap_path(path))
     last = _latest_manifest(path)
-    version = (last["version"] + 1) if last else 1
-    data_dir = fs.join(
-        base, "data", f"v{version:08d}-{_uuid.uuid4().hex[:8]}"
+    _data_dir, new_files, new_schema = _stage_files(
+        spark, path, (last["version"] + 1) if last else 1, df
     )
-    df.write.mode("error").parquet(data_dir)
-    # one schema-inferring read serves both the file list and the
-    # written schema; the row count comes from the footers (no second
-    # scan of the just-written data — see _footer_row_count)
-    written = spark.read.parquet(data_dir)
-    new_files = sorted(written.inputFiles())
     n_new = _footer_row_count(new_files)
-    # the schema the files actually carry (post-write, what readers see)
-    new_schema = [list(p) for p in written.dtypes]
     # legacy-schema derivation cache (ADVICE r11): pre-manifest-schema
     # tables derive prev_schema from the previous version's footers —
     # once per PREVIOUS VERSION, not once per publish-race retry
@@ -1339,10 +1359,19 @@ def read_parquet_snapshot(
     surviving files, so the result is exact whether or not any stats
     exist (files without stats are always kept). Unknown columns raise;
     richer predicates belong in a normal ``.where()`` on the result."""
-    # O(1) manifest reads regardless of history length: latest via one
-    # readdir + one JSON read, pinned versions via a direct name lookup
-    # (the versions listing for the error message is readdir-only),
-    # as-of via an O(log versions) binary search
+    return _read_snapshot_files(
+        spark, _resolve_manifest(path, version, as_of_utc), where=where
+    )
+
+
+def _resolve_manifest(path: str, version=None, as_of_utc=None) -> dict:
+    """The manifest a version/as-of pin names (default: latest) — the one
+    resolution rule of read, restore and clone. O(1) manifest reads
+    regardless of history length: latest via one readdir + one JSON
+    read, pinned versions via a direct name lookup (the versions listing
+    for the error message is readdir-only), as-of via an O(log versions)
+    binary search. An empty table raises ``FileNotFoundError``; a pin
+    nothing satisfies raises ``ValueError``."""
     if version is not None and as_of_utc is not None:
         raise ValueError("pass version OR as_of_utc, not both")
     if as_of_utc is not None:
@@ -1350,30 +1379,23 @@ def read_parquet_snapshot(
         if version is None:
             have = _manifest_versions(path)
             if not have:
-                raise FileNotFoundError(
-                    f"no snapshots published at {path}"
-                )
+                raise FileNotFoundError(f"no snapshots published at {path}")
             raise ValueError(
                 f"no snapshot at {path} published at or before "
-                f"{as_of_utc!r} (earliest surviving version is "
-                f"v{have[0]})"
+                f"{as_of_utc!r} (earliest surviving version is v{have[0]})"
             )
     if version is None:
         snap = _latest_manifest(path)
-        if snap is None:
-            raise FileNotFoundError(f"no snapshots published at {path}")
     else:
         snap = _load_manifest(path, version)
-        if snap is None:
-            have = _manifest_versions(path)
-            if not have:
-                raise FileNotFoundError(
-                    f"no snapshots published at {path}"
-                )
-            raise ValueError(
-                f"snapshot v{version} not found at {path}; have {have}"
-            )
-    return _read_snapshot_files(spark, snap, where=where)
+    if snap is None:
+        have = _manifest_versions(path)
+        if version is None or not have:
+            raise FileNotFoundError(f"no snapshots published at {path}")
+        raise ValueError(
+            f"snapshot v{version} not found at {path}; have {have}"
+        )
+    return snap
 
 
 def _read_snapshot_files(
@@ -1556,10 +1578,9 @@ def _effective_hwm(path: str, base: dict, cache: dict) -> int | None:
     (the observed latest/source manifest): the base's own stamp when
     present — one dict lookup, the common case on every
     post-carry-forward chain — else one barrier-aware newest-first scan
-    per DISTINCT base version, memoized in ``cache`` across a publish
-    retry loop (the ADVICE r12 discipline: never O(versions) per
-    attempt; shared by compact/DML/restore since r13's review pass
-    found the idiom triplicated)."""
+    per DISTINCT base version, memoized in ``cache`` across the retries
+    of :func:`_publish_loop` (the ADVICE r12 discipline: never
+    O(versions) per attempt)."""
     hwm = base.get("src_batch")
     if hwm is not None:
         return int(hwm)
@@ -1583,6 +1604,104 @@ def _link_manifest(path: str, version: int, payload: dict) -> bool:
         fs.join(_snap_path(path), f"v{version:08d}.json"),
         _json.dumps(payload),
     )
+
+
+def _publish_loop(path: str, build, verb: str, max_retries: int):
+    """The optimistic publish loop of every snapshot op that derives a
+    new version from the table's current one — compaction, the DML
+    verbs and restore (the commit-service loop of transactional formats,
+    on a plain filesystem):
+
+    1. read the LATEST manifest (the optimistic "read version");
+    2. ``build(latest)`` returns the next manifest's payload, or None
+       when there is nothing to publish;
+    3. stamp the payload with the table's effective stream high-water
+       (:func:`_effective_hwm`, keyed by the observed latest): these ops
+       are maintenance ON the stream's lineage, not a reset — a vacuum
+       can leave their version as the ONLY manifest, and a crashed
+       stream's replay after them must still be a publish no-op;
+    4. claim the payload's version with one O_EXCL link. Losing the race
+       means the table ADVANCED since step 1 — publishing a stale
+       rewrite would silently drop the winner's rows (the lost-update
+       anomaly) — so the attempt is abandoned whole (a staged data dir
+       becomes an invisible orphan for vacuum) and rebuilt against the
+       new latest, up to ``max_retries`` times.
+
+    Returns ``(latest, payload, retries)``; ``payload`` is None for a
+    no-op."""
+    retries = 0
+    hwm_cache: dict = {}  # per observed latest version, across retries
+    while True:
+        latest = _latest_manifest(path)  # one JSON read per attempt
+        if latest is None:
+            raise FileNotFoundError(f"no snapshots published at {path}")
+        payload = build(latest)
+        if payload is None:
+            return latest, None, retries
+        hwm = _effective_hwm(path, latest, hwm_cache)
+        if hwm is not None:
+            payload["src_batch"] = hwm
+        if _link_manifest(path, payload["version"], payload):
+            return latest, payload, retries
+        retries += 1
+        if retries > max_retries:
+            raise RuntimeError(
+                f"snapshot {verb} at {path} lost the publish race "
+                f"{retries} times; table is advancing faster than the "
+                "rewrite"
+            )
+
+
+def _rewrite_payload(
+    spark, path: str, src: dict, df: DataFrame, expected_rows: int,
+    mode: str, from_key: str, stats_columns: list[str] | None,
+) -> dict:
+    """Stage ``df`` as the full replacement of base manifest ``src`` and
+    return the next version's payload — the rewrite step compaction and
+    the DML verbs share. The staged files are count-verified from their
+    footers against ``expected_rows`` (a mismatch removes the staged dir
+    and raises; nothing is published). The payload names only the new
+    files, records the base under ``from_key`` (``compacted_from`` or
+    ``replaced_from``) and recomputes skipping stats for
+    ``stats_columns`` from the new footers — a rewrite invalidates every
+    old per-file range. The new files are uniform, so an evolved base
+    sheds its merge-read flag."""
+    import time as _time
+
+    version = src["version"] + 1
+    data_dir, files, schema = _stage_files(spark, path, version, df)
+    rows = _footer_row_count(files)
+    if rows != expected_rows:
+        _fs.for_path(path).remove_tree(data_dir)
+        raise RuntimeError(
+            f"{mode} count-verify failed at {path}: expected "
+            f"{expected_rows} rows from base v{src['version']}, rewrite "
+            f"read back {rows}"
+        )
+    payload = {
+        "version": version, "files": files, "rows": rows, "mode": mode,
+        "schema": schema, from_key: src["version"],
+        "published_utc": _time.time(),
+    }
+    if stats_columns:
+        payload["stats_columns"] = list(stats_columns)
+        payload["stats"] = _collect_file_stats(files, stats_columns)
+    return payload
+
+
+def _carry_over(src: dict, payload: dict) -> dict:
+    """Add to ``payload`` what a manifest naming ``src``'s file list
+    VERBATIM inherits from it (restore, clone): the recorded schema, the
+    ``evolved`` flag (the files still mix schemas) and the skipping
+    stats (same files, same stats)."""
+    if src.get("schema") is not None:
+        payload["schema"] = src["schema"]
+    if src.get("evolved"):
+        payload["evolved"] = True
+    if src.get("stats_columns"):
+        payload["stats_columns"] = list(src["stats_columns"])
+        payload["stats"] = src.get("stats") or {}
+    return payload
 
 
 def snapshot_publish_batch(
@@ -1750,19 +1869,20 @@ def compact_parquet_snapshot(
     isolated throughout because the manifest IS the atomicity — no
     staged swap, no window where the table is missing.
 
-    Race protocol (the write_parquet_snapshot pattern): the compacted
-    data is written to a fresh immutable dir, count-verified against
-    the base manifest's row count, then published with one O_EXCL
-    manifest link. Losing the link race means the table ADVANCED during
-    the rewrite — publishing the stale compaction anyway would silently
-    drop the winner's rows — so the attempt is abandoned (its data dir
-    becomes an invisible orphan for vacuum) and the compaction re-reads
-    the new latest and retries, up to ``max_retries``. Already-compact
-    tables (``<= target_files`` files) are a no-op — unless
-    ``cluster_by`` asks for a layout change, or ``force=True`` demands
-    the rewrite anyway (r13: how a SHALLOW CLONE materializes — a
-    small clone would otherwise no-op and silently keep referencing the
-    source's bytes past the source's vacuum horizon).
+    Race protocol (:func:`_publish_loop`, shared with the DML verbs and
+    restore): the compacted data is staged in a fresh immutable dir,
+    footer-count-verified against the base manifest's row count
+    (:func:`_rewrite_payload`, the DML rewrite step), then published
+    with one O_EXCL manifest link. Losing the link race means the table
+    ADVANCED during the rewrite — publishing the stale compaction anyway
+    would silently drop the winner's rows — so the attempt is abandoned
+    (its data dir becomes an invisible orphan for vacuum) and the
+    compaction re-reads the new latest and retries, up to
+    ``max_retries``. Already-compact tables (``<= target_files`` files)
+    are a no-op — unless ``cluster_by`` asks for a layout change, or
+    ``force=True`` demands the rewrite anyway (r13: how a SHALLOW CLONE
+    materializes — a small clone would otherwise no-op and silently keep
+    referencing the source's bytes past the source's vacuum horizon).
 
     ``cluster_by`` (r13 — the OPTIMIZE/CLUSTER BY of transactional
     formats): the rewrite range-partitions and sorts on the named
@@ -1788,20 +1908,11 @@ def compact_parquet_snapshot(
 
     Returns ``{"compacted", "version", "from_version", "files_before",
     "files_after", "rows", "retries"}``."""
-    import time as _time
-    import uuid as _uuid
-
     if target_files < 1:
         raise ValueError("target_files must be >= 1")
     _validate_cluster_args(cluster_by, cluster_strategy)
-    fs = _fs.for_path(path)
-    base = _local_path(path)
-    retries = 0
-    hwm_cache: dict = {}  # per base version, shared across retries
-    while True:
-        src = _latest_manifest(path)  # one JSON read per attempt
-        if src is None:
-            raise FileNotFoundError(f"no snapshots published at {path}")
+
+    def build(src):
         if cluster_by:
             # legacy pre-schema manifests record no schema — resolve it
             # from the file footers (plan-only dtypes probe, the same
@@ -1848,18 +1959,8 @@ def compact_parquet_snapshot(
                         "numeric surrogate (day number, dictionary "
                         "code) or use cluster_strategy='range'"
                     )
-        if len(src["files"]) <= target_files and not cluster_by and not force:
-            return {
-                "compacted": False, "version": src["version"],
-                "from_version": src["version"],
-                "files_before": len(src["files"]),
-                "files_after": len(src["files"]),
-                "rows": src["rows"], "retries": retries,
-            }
-        version = src["version"] + 1
-        data_dir = fs.join(
-            base, "data", f"v{version:08d}-{_uuid.uuid4().hex[:8]}"
-        )
+        if len(src["files"]) <= target_files and not (cluster_by or force):
+            return None  # already compact
         # evolved-aware read: compacting a schema-evolved version
         # materializes the widened schema into uniform files (nulls
         # filled), so the compact version no longer needs merge-reads
@@ -1884,153 +1985,54 @@ def compact_parquet_snapshot(
             ).sortWithinPartitions(*cluster_by)
         else:
             rewritten = reader.repartition(target_files)
-        rewritten.write.mode("error").parquet(data_dir)
-        compacted = spark.read.parquet(data_dir)
-        new_files = sorted(compacted.inputFiles())
-        rows = _footer_row_count(new_files)
-        if rows != src["rows"]:
-            fs.remove_tree(data_dir)
-            raise RuntimeError(
-                f"compaction count-verify failed at {path}: base "
-                f"v{src['version']} has {src['rows']} rows, rewrite "
-                f"read back {rows}"
-            )
-        payload = {
-            "version": version, "files": new_files, "rows": rows,
-            "mode": "compact", "schema": [list(p) for p in compacted.dtypes],
-            "compacted_from": src["version"],
-            "published_utc": _time.time(),
-        }
-        # recompute data-skipping stats from the compacted footers — the
-        # rewrite invalidates every old per-file range; a clustered
-        # compaction on a stats-less table starts tracking cluster_by
-        eff_stats_cols = src.get("stats_columns") or (
-            list(cluster_by) if cluster_by else None
+        # a clustered compaction on a stats-less table starts tracking
+        # cluster_by
+        return _rewrite_payload(
+            spark, path, src, rewritten, src["rows"], "compact",
+            "compacted_from", src.get("stats_columns") or cluster_by,
         )
-        if eff_stats_cols:
-            payload["stats_columns"] = list(eff_stats_cols)
-            payload["stats"] = _collect_file_stats(
-                new_files, eff_stats_cols
-            )
-        # carry the stream high-water into the compact manifest (ADVICE
-        # r11 medium): a vacuum (e.g. keep=1 in a maintenance window)
-        # can leave a compact version as the ONLY manifest — without the
-        # stamp, _latest_src_batch would return None and a crashed
-        # stream's restart would re-publish its last batch as duplicate
-        # rows, breaking the exactly-once-publish contract; the repair
-        # in turn keeps _latest_src_batch O(1) on the compacted table.
-        hwm = _effective_hwm(path, src, hwm_cache)
-        if hwm is not None:
-            payload["src_batch"] = int(hwm)
-        if not _link_manifest(path, version, payload):
-            # the table advanced mid-rewrite; this compaction no longer
-            # reflects the latest version — abandon and recompact
-            retries += 1
-            if retries > max_retries:
-                raise RuntimeError(
-                    f"snapshot compaction at {path} lost the publish "
-                    f"race {retries} times; table is advancing faster "
-                    "than the rewrite"
-                )
-            continue
-        return {
-            "compacted": True, "version": version,
-            "from_version": src["version"],
-            "files_before": len(src["files"]),
-            "files_after": len(new_files),
-            "rows": rows, "retries": retries,
-        }
+
+    src, payload, retries = _publish_loop(
+        path, build, "compaction", max_retries
+    )
+    out = payload or src
+    return {
+        "compacted": payload is not None, "version": out["version"],
+        "from_version": src["version"],
+        "files_before": len(src["files"]),
+        "files_after": len(out["files"]),
+        "rows": out["rows"], "retries": retries,
+    }
 
 
 def _rmw_publish_snapshot(
     spark, path: str, compute, mode: str, max_retries: int = 5
 ) -> dict:
-    """Optimistic read-modify-write publish shared by the snapshot DML
-    ops (:func:`merge_upsert_snapshot`, :func:`delete_from_snapshot`) —
-    the conflict-detection loop transactional formats run under their
-    commit service, on a plain filesystem (r13; the compaction race
-    protocol generalized to arbitrary content rewrites):
+    """Optimistic read-modify-write publish of the snapshot DML verbs
+    (:func:`merge_upsert_snapshot`, :func:`delete_from_snapshot`,
+    :func:`update_snapshot`) through :func:`_publish_loop`: per attempt,
+    ``compute(src_manifest, base_df)`` builds the replacement frame and
+    returns ``(result_df, expected_rows, info)`` — expected_rows is the
+    semantic count-verify, info the op's stats — and the frame is staged,
+    verified and published as a ``mode`` version replacing ``src``
+    (:func:`_rewrite_payload`). A lost race re-reads and re-computes."""
+    info: dict = {}
 
-    1. read the LATEST manifest (the optimistic "read version");
-    2. ``compute(src_manifest, base_df)`` builds the replacement frame
-       and returns ``(result_df, expected_rows, info)`` — expected_rows
-       is the semantic count-verify, info the op's stats;
-    3. write the result to a fresh immutable data dir, read it back and
-       count-verify;
-    4. publish ``v(base+1)`` with one O_EXCL link. Losing the link race
-       means the table ADVANCED between the read and the publish —
-       committing the stale rewrite would silently drop the winner's
-       rows (the lost-update anomaly), so the attempt is abandoned
-       whole (its dir becomes an invisible orphan for vacuum) and the
-       op re-reads and re-computes against the new latest, up to
-       ``max_retries``.
-
-    The published manifest is stamped with the table's effective stream
-    high-water (same rule as compaction: DML is maintenance ON the
-    stream's lineage, not a reset — a crashed stream's replay after a
-    mid-stream merge must still be a publish no-op), and the rewrite
-    materializes uniform files, so an evolved base sheds the flag
-    exactly like compaction does."""
-    import time as _time
-    import uuid as _uuid
-
-    fs = _fs.for_path(path)
-    base = _local_path(path)
-    retries = 0
-    hwm_cache: dict = {}  # per base version, shared across retries
-    while True:
-        src = _latest_manifest(path)
-        if src is None:
-            raise FileNotFoundError(f"no snapshots published at {path}")
-        result_df, expected_rows, info = compute(
+    def build(src):
+        result_df, expected_rows, op_info = compute(
             src, _read_snapshot_files(spark, src)
         )
-        version = src["version"] + 1
-        data_dir = fs.join(
-            base, "data", f"v{version:08d}-{_uuid.uuid4().hex[:8]}"
+        info.update(op_info)
+        return _rewrite_payload(
+            spark, path, src, result_df, expected_rows, mode,
+            "replaced_from", src.get("stats_columns"),
         )
-        result_df.write.mode("error").parquet(data_dir)
-        written = spark.read.parquet(data_dir)
-        new_files = sorted(written.inputFiles())
-        rows = _footer_row_count(new_files)
-        if rows != expected_rows:
-            fs.remove_tree(data_dir)
-            raise RuntimeError(
-                f"{mode} count-verify failed at {path}: expected "
-                f"{expected_rows} rows from base v{src['version']}, "
-                f"rewrite read back {rows}"
-            )
-        payload = {
-            "version": version, "files": new_files, "rows": rows,
-            "mode": mode, "schema": [list(p) for p in written.dtypes],
-            "replaced_from": src["version"],
-            "published_utc": _time.time(),
-        }
-        # the rewrite replaces every file — recompute skipping stats for
-        # the table's recorded columns (same rule as compaction)
-        if src.get("stats_columns"):
-            payload["stats_columns"] = list(src["stats_columns"])
-            payload["stats"] = _collect_file_stats(
-                new_files, src["stats_columns"]
-            )
-        hwm = _effective_hwm(path, src, hwm_cache)
-        if hwm is not None:
-            payload["src_batch"] = int(hwm)
-        if not _link_manifest(path, version, payload):
-            # conflict: the table advanced mid-rewrite — abandon whole
-            # (committing would drop the winner's rows) and recompute
-            retries += 1
-            if retries > max_retries:
-                raise RuntimeError(
-                    f"snapshot {mode} at {path} lost the publish race "
-                    f"{retries} times; table is advancing faster than "
-                    "the rewrite"
-                )
-            continue
-        return {
-            "version": version, "from_version": src["version"],
-            "rows": rows, "retries": retries, **info,
-        }
+
+    src, payload, retries = _publish_loop(path, build, mode, max_retries)
+    return {
+        "version": payload["version"], "from_version": src["version"],
+        "rows": payload["rows"], "retries": retries, **info,
+    }
 
 
 def merge_upsert_snapshot(
@@ -2273,14 +2275,7 @@ def restore_snapshot(
     time-travelable."""
     import time as _time
 
-    src = _load_manifest(path, version)
-    if src is None:
-        have = _manifest_versions(path)
-        if not have:
-            raise FileNotFoundError(f"no snapshots published at {path}")
-        raise ValueError(
-            f"snapshot v{version} not found at {path}; have {have}"
-        )
+    src = _resolve_manifest(path, version)
     # read-back verification (r13 review): restore is the one publish
     # that names files it did not just write — a vacuum concurrently
     # dropping the source version could have deleted them, and linking
@@ -2299,49 +2294,21 @@ def restore_snapshot(
             f"back {readback} — the version was likely vacuumed "
             "mid-restore"
         )
-    retries = 0
-    # hwm keyed by the observed latest version (the compact discipline):
-    # a lost race means a NEW latest — an unstamped overwrite landing
-    # there is a barrier, and a stale pre-race scan result would stamp
-    # a wrong high-water onto the restore manifest
-    hwm_cache: dict = {}
-    while True:
-        latest = _latest_manifest(path)
-        new_version = latest["version"] + 1
-        payload = {
-            "version": new_version,
-            "files": src["files"],
-            "rows": src["rows"],
-            "mode": "restore",
-            "restored_from": version,
-            "published_utc": _time.time(),
-        }
-        if src.get("schema") is not None:
-            payload["schema"] = src["schema"]
-        if src.get("evolved"):
-            payload["evolved"] = True
-        # same files ⇒ same stats: the source version's skipping stats
-        # restore verbatim with its file list
-        if src.get("stats_columns"):
-            payload["stats_columns"] = list(src["stats_columns"])
-            payload["stats"] = src.get("stats") or {}
-        hwm = _effective_hwm(path, latest, hwm_cache)
-        if hwm is not None:
-            payload["src_batch"] = int(hwm)
-        if not _link_manifest(path, new_version, payload):
-            retries += 1
-            if retries > max_retries:
-                raise RuntimeError(
-                    f"snapshot restore at {path} lost the publish race "
-                    f"{retries} times"
-                )
-            continue
-        return {
-            "version": new_version,
-            "restored_from": version,
-            "rows": src["rows"],
-            "retries": retries,
-        }
+
+    def build(latest):
+        return _carry_over(src, {
+            "version": latest["version"] + 1, "files": src["files"],
+            "rows": src["rows"], "mode": "restore",
+            "restored_from": version, "published_utc": _time.time(),
+        })
+
+    _latest, payload, retries = _publish_loop(
+        path, build, "restore", max_retries
+    )
+    return {
+        "version": payload["version"], "restored_from": version,
+        "rows": src["rows"], "retries": retries,
+    }
 
 
 def clone_snapshot(
@@ -2379,28 +2346,7 @@ def clone_snapshot(
     and footer work (``spark=None`` is fine and the test proves it)."""
     import time as _time
 
-    if version is not None and as_of_utc is not None:
-        raise ValueError("pass version OR as_of_utc, not both")
-    if as_of_utc is not None:
-        version = _version_as_of(src_path, _as_of_epoch(as_of_utc))
-        if version is None:
-            raise ValueError(
-                f"no snapshot at {src_path} published at or before "
-                f"{as_of_utc!r}"
-            )
-    if version is None:
-        src = _latest_manifest(src_path)
-        if src is None:
-            raise FileNotFoundError(
-                f"no snapshots published at {src_path}"
-            )
-    else:
-        src = _load_manifest(src_path, version)
-        if src is None:
-            raise ValueError(
-                f"snapshot v{version} not found at {src_path}; have "
-                f"{_manifest_versions(src_path)}"
-            )
+    src = _resolve_manifest(src_path, version, as_of_utc)
     if _manifest_versions(dst_path):
         raise ValueError(
             f"{dst_path} is already a snapshot table — clone creates "
@@ -2414,51 +2360,32 @@ def clone_snapshot(
     # vacuumed file surfaces as an unreadable footer, a truncated /
     # swapped one as a row-count mismatch — the same races the scan
     # caught, at metadata cost.
-    import pyarrow.parquet as _pq
-
-    readback = 0
-    for f in src["files"]:
-        try:
-            readback += _pq.ParquetFile(_local_path(f)).metadata.num_rows
-        except Exception as exc:
-            raise RuntimeError(
-                f"clone verification failed: {src_path} v{src['version']} "
-                f"references {f}, which is missing or unreadable — the "
-                f"version was likely vacuumed mid-clone"
-            ) from exc
+    head = f"clone verification failed: {src_path} v{src['version']}"
+    try:
+        readback = _footer_row_count(src["files"])
+    except RuntimeError as exc:
+        raise RuntimeError(
+            f"{head}: {exc} — the version was likely vacuumed mid-clone"
+        ) from exc
     if readback != src["rows"]:
         raise RuntimeError(
-            f"clone verification failed: {src_path} v{src['version']} "
-            f"records {src['rows']} rows but its file footers total "
-            f"{readback} — the version was likely vacuumed mid-clone"
+            f"{head} records {src['rows']} rows but its file footers "
+            f"total {readback} — the version was likely vacuumed mid-clone"
         )
     _fs.for_path(dst_path).make_dirs(_snap_path(dst_path))
-    payload = {
-        "version": 1,
-        "files": src["files"],
-        "rows": src["rows"],
-        "mode": "clone",
-        "cloned_from": {
-            "path": _local_path(src_path), "version": src["version"]
-        },
+    cloned_from = {"path": _local_path(src_path), "version": src["version"]}
+    payload = _carry_over(src, {
+        "version": 1, "files": src["files"], "rows": src["rows"],
+        "mode": "clone", "cloned_from": cloned_from,
         "published_utc": _time.time(),
-    }
-    if src.get("schema") is not None:
-        payload["schema"] = src["schema"]
-    if src.get("evolved"):
-        payload["evolved"] = True
-    if src.get("stats_columns"):
-        payload["stats_columns"] = list(src["stats_columns"])
-        payload["stats"] = src.get("stats") or {}
+    })
     if not _link_manifest(dst_path, 1, payload):
         raise ValueError(
             f"{dst_path} was concurrently created — clone refuses to "
             "race another table's first publish"
         )
     return {
-        "version": 1,
-        "cloned_from": payload["cloned_from"],
-        "rows": src["rows"],
+        "version": 1, "cloned_from": cloned_from, "rows": src["rows"],
         "files": len(src["files"]),
     }
 

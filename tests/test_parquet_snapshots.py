@@ -1380,6 +1380,88 @@ def test_restore_refuses_vacuumed_source_files(spark, tmp_path):
     ) == [10, 11]
 
 
+def test_restore_lost_race_relinks_next_version(spark, tmp_path, monkeypatch):
+    """Restore is a rollback intent, not a read-modify-write: a publish
+    racing its manifest link takes the version, and the restore
+    re-links one past it. The racer stays time-travelable, and the
+    restore manifest carries the NEW latest's stream high-water."""
+    tbl = str(tmp_path / "tbl")
+    assert W.snapshot_publish_batch(_df(spark, 0, 5), 0, tbl) is True   # v1
+    assert W.snapshot_publish_batch(_df(spark, 5, 8), 1, tbl) is True   # v2
+    real_link = os.link
+    state = {"raced": False}
+
+    def racing_link(src, dst):
+        if not state["raced"] and dst.endswith(".json"):
+            state["raced"] = True
+            # batch 2 claims v3 first (re-entrant through this wrapper)
+            W.snapshot_publish_batch(_df(spark, 100, 102), 2, tbl)
+        return real_link(src, dst)
+
+    monkeypatch.setattr(os, "link", racing_link)
+    res = W.restore_snapshot(spark, tbl, 1)
+    monkeypatch.undo()
+    assert state["raced"] and res["retries"] == 1
+    assert res == {"version": 4, "restored_from": 1, "rows": 5, "retries": 1}
+    snaps = {s["version"]: s for s in W.list_parquet_snapshots(tbl)}
+    assert sorted(snaps) == [1, 2, 3, 4]
+    assert snaps[3]["mode"] == "append" and snaps[4]["mode"] == "restore"
+    assert sorted(
+        r.id for r in W.read_parquet_snapshot(spark, tbl).collect()
+    ) == list(range(5))
+    assert sorted(
+        r.id for r in W.read_parquet_snapshot(spark, tbl, version=3).collect()
+    ) == list(range(8)) + [100, 101]
+    # stamped with the racer's batch, not the pre-race latest's
+    assert snaps[4]["src_batch"] == 2
+    assert W.snapshot_publish_batch(_df(spark, 100, 102), 2, tbl) is False
+
+
+_RESOLVE_CASES = {
+    # case: (publish v1 first?, pin, error, message)
+    "empty": (False, {"version": 1}, FileNotFoundError, "no snapshots"),
+    "missing_version": (True, {"version": 7}, ValueError, "v7 not found"),
+    "as_of_before_first": (
+        True, {"as_of_utc": 0.0}, ValueError, "published at or before"
+    ),
+    "version_and_as_of": (
+        True, {"version": 1, "as_of_utc": 0.0}, ValueError, "not both"
+    ),
+}
+
+
+@pytest.mark.parametrize(
+    "op,case",
+    [
+        (op, case)
+        for case, (_p, pin, _e, _m) in _RESOLVE_CASES.items()
+        for op in ("read", "restore", "clone")
+        # restore pins by version only
+        if op != "restore" or "as_of_utc" not in pin
+    ],
+)
+def test_version_pin_resolution_shared_by_read_restore_clone(
+    spark, tmp_path, op, case
+):
+    """Read, restore and clone resolve a version/as-of pin through one
+    rule: an empty table raises FileNotFoundError, a pin no surviving
+    version satisfies raises ValueError, and version plus as_of_utc
+    is refused. A refused clone publishes nothing at its destination."""
+    publish, pin, error, match = _RESOLVE_CASES[case]
+    tbl, dst = str(tmp_path / "tbl"), str(tmp_path / "dst")
+    if publish:
+        W.write_parquet_snapshot(_df(spark, 0, 3), tbl)
+    ops = {
+        "read": lambda: W.read_parquet_snapshot(spark, tbl, **pin),
+        "restore": lambda: W.restore_snapshot(spark, tbl, **pin),
+        "clone": lambda: W.clone_snapshot(spark, tbl, dst, **pin),
+    }
+    with pytest.raises(error, match=match):
+        ops[op]()
+    assert W._manifest_versions(tbl) == ([1] if publish else [])
+    assert W._manifest_versions(dst) == []
+
+
 def test_vacuum_with_relative_path_keeps_live_data(spark, tmp_path, monkeypatch):
     """Review r14: the orphan sweep compared the caller's RELATIVE
     spelling against abspath'd manifest dirs, so a relative-path vacuum
