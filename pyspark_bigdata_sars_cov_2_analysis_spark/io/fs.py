@@ -117,6 +117,11 @@ class SnapshotFS(abc.ABC):
     @abc.abstractmethod
     def mtime(self, path: str) -> float: ...
 
+    def size(self, path: str) -> int | None:
+        """Byte size of a file, or None where the backend's stat does
+        not report one (metadata memos then key on ``mtime`` alone)."""
+        return None
+
     # -- writes --
     @abc.abstractmethod
     def make_dirs(self, path: str) -> None: ...
@@ -203,6 +208,10 @@ class LocalFS(SnapshotFS):
     @staticmethod
     def mtime(path: str) -> float:
         return os.path.getmtime(path)
+
+    @staticmethod
+    def size(path: str) -> int:
+        return os.path.getsize(path)
 
     # -- writes ----------------------------------------------------------
     @staticmethod

@@ -18,12 +18,15 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 from pyspark_bigdata_sars_cov_2_analysis_spark.functions.compat import (  # noqa: F401
     pround,
     pyround,
     sql_round,
 )
+from pyspark_bigdata_sars_cov_2_analysis_spark.io import fs as _fs
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -96,14 +99,50 @@ def release_plan_caches() -> int:
     return n
 
 
+# Inferred parquet schemas, keyed by resolved absolute path, each held
+# with the (mtime, size) stamp it was inferred at. Catalog metadata
+# only, never data: every action still scans the file. A missed stamp
+# re-infers, so a file rewritten in place is read under its new schema.
+_SCHEMA_MEMO: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> tuple[DataFrame, StructType]:
+    """``spark.read.parquet(path)`` and its schema. Spark infers a
+    schema by running a one-task job over the footer; for a regular
+    file whose stamp matches the memo, the read takes the memoized
+    schema instead and launches no job. Directories (whose mtime does
+    not change when a part file is rewritten in place) and paths the
+    filesystem seam cannot stat are inferred every call, as before."""
+    try:
+        fs = _fs.for_path(path)
+        key = fs.absolute(fs.resolve(path))
+        stamp = None if fs.is_dir(key) else (fs.mtime(key), fs.size(key))
+    except (OSError, ValueError, NotImplementedError):
+        key = stamp = None
+    hit = _SCHEMA_MEMO.get(key)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path), hit[1]
+    df = spark.read.parquet(path)
+    schema = df.schema
+    if stamp is not None:
+        _SCHEMA_MEMO[key] = (stamp, schema)
+    return df, schema
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one synthetic table (TESTDATA.md).
 
-    ``events.ts`` is parquet TIMESTAMP(NANOS), which Spark's vectorized
-    reader rejects; with ``spark.sql.legacy.parquet.nanosAsLong`` it lands
-    as a bigint of nanos and we rebuild the timestamp by integer floor-div
-    to micros — the same truncation DuckDB applies reading ns into its
-    µs-precision TIMESTAMP, so both engines see identical values.
+    The generated ``events.parquet`` stores ``ts`` as TIMESTAMP(MICROS)
+    (pyarrow reads it as ``timestamp[us]`` at every scale) and lands as
+    a plain TIMESTAMP. An ``events.parquet`` written with TIMESTAMP(NANOS),
+    which Spark's vectorized reader rejects, lands under
+    ``spark.sql.legacy.parquet.nanosAsLong`` as a bigint of nanos, and
+    the timestamp is rebuilt by integer ``DIV`` to micros — the same
+    truncation DuckDB applies reading ns into its µs-precision
+    TIMESTAMP, so both engines see identical values.
+
+    The schema is inferred once per file version (``_read_parquet``);
+    the conf pins below are set on every call, before any inference.
 
     The session timezone is pinned to UTC here (not only in
     ``start_session``) so that under the driver's vanilla SparkSession
@@ -118,17 +157,15 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # the instant interpretation is identical either way (and matches
     # DuckDB's naive read), so pin inference off for a plain TIMESTAMP.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events":
-        ts_type = dict(df.dtypes).get("ts")
-        from pyspark.sql import functions as F
-
-        if ts_type == "bigint":
+    df, schema = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
+    if name == "events" and "ts" in schema.fieldNames():
+        ts_type = schema["ts"].dataType
+        if isinstance(ts_type, LongType):
             # integer DIV, not double division — nanos ~1.7e18 exceed
             # double's 53-bit exact range, so float division drifts by
             # microseconds
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-        elif ts_type == "timestamp_ntz":
+        elif isinstance(ts_type, TimestampNTZType):
             # belt-and-braces: if the conf pin above didn't take (e.g. a
             # reader cached before this call), the cast under the UTC pin is
             # value-preserving

@@ -30,8 +30,9 @@ DEFAULT_CONF: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     # keep parquet scans vectorized and pushdown-friendly
     "spark.sql.parquet.filterPushdown": "true",
-    # testdata events.ts is TIMESTAMP(NANOS) which vanilla Spark rejects;
-    # read as long and convert at the scan wrapper (registry.table)
+    # an events.ts written as TIMESTAMP(NANOS) (the testdata's is MICROS)
+    # is rejected by vanilla Spark; read it as long and convert at the
+    # scan wrapper (registry.table)
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.parquet.aggregatePushdown": "true",
     # don't let tiny local runs create 200 empty shuffle files

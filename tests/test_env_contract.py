@@ -194,3 +194,58 @@ def test_attestation_window_arithmetic():
             f"unexpected={sorted(served - set(window))} "
             f"missing={sorted(set(window) - served)}"
         )
+
+
+REPEAT_PROBE = r"""
+import json, sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
+
+spark = (
+    SparkSession.builder.master("local[2]")
+    .appName("env-contract-repeat-probe")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+)
+from pyspark_bigdata_sars_cov_2_analysis_spark.plans.registry import table
+
+PINS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.session.timeZone",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+first = table(spark, "/root/testdata/sf0.001", "events")
+first_ts = first.select(F.unix_micros("ts")).limit(5).collect()
+# a caller resetting the session between requests: the memo-hit call
+# must pin the confs again itself
+for key in PINS:
+    spark.conf.unset(key)
+ev = table(spark, "/root/testdata/sf0.001", "events")
+out = {{
+    "ts_dtype": dict(ev.dtypes).get("ts"),
+    "confs": [spark.conf.get(key) for key in PINS],
+    "same_ts": ev.select(F.unix_micros("ts")).limit(5).collect() == first_ts,
+}}
+print("CONTRACT:" + json.dumps(out))
+spark.stop()
+"""
+
+
+def test_vanilla_session_events_contract_on_repeat_call():
+    """The second ``table(..., "events")`` call in a vanilla session is
+    served from the schema memo; it still pins all three confs and still
+    returns ``ts`` as a plain TIMESTAMP."""
+    proc = subprocess.run(
+        [sys.executable, "-c", REPEAT_PROBE.format(repo=REPO)],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        cwd=REPO,
+    )
+    lines = [l for l in proc.stdout.splitlines() if l.startswith("CONTRACT:")]
+    assert lines, f"probe produced no contract line\n{proc.stdout}\n{proc.stderr}"
+    got = json.loads(lines[-1][len("CONTRACT:"):])
+    assert got["ts_dtype"] == "timestamp", got
+    assert got["confs"] == ["true", "UTC", "false"], got
+    assert got["same_ts"], got
